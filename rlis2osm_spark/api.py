@@ -37,8 +37,10 @@ def dissolve(combined: DataFrame, fields: list[str] | None = None,
              approx_rows: int | None = None,
              ordered: bool = False) -> DataFrame:
     """EP3 (dissolve.py:21-49): merge connected identically-tagged ways.
-    Degenerate tag-groups auto-route to the iterative CC (skew guard);
-    ``algorithm="greedy"`` replays the reference's traversal exactly
+    ``algorithm`` is ``"auto"`` (true connected components: tag-groups
+    above ``max_group_rows`` route to the iterative CC as a skew guard,
+    the rest to the fused union-find, and both feed one merge pass) or
+    ``"greedy"``, which replays the reference's traversal exactly
     (byte-parity grouping on forked topologies); ``approx_rows`` (a free
     Iceberg-snapshot/parquet-footer row bound) skips the auto planning
     job when no group can exceed ``max_group_rows``; ``ordered=True``

@@ -22,6 +22,7 @@ Python at the Spark layer.
 from __future__ import annotations
 
 import re
+from itertools import islice
 
 SMALL_BASE = r"a|an|and|as|at|but|by|en|for|if|in|of|on|or|the|to|v\.?|via|vs\.?"
 PUNCT = r"""!"#$%&'‘()*+,\-–‒—―./:;?@[\\\]_`{|}~"""
@@ -56,10 +57,13 @@ _DEFAULT_RX = _compile(SMALL_BASE)
 # of (word, all_caps, small_first_last) — every branch of the word loop
 # appends exactly one string. The module-level dict survives across tasks
 # in a reused Python worker; bounded so adversarial vocabularies cannot
-# grow it without limit. Only rlis_titlecase passes it (the memo key does
-# not encode callback/rx, which are fixed on that path).
+# grow it without limit: when full, the oldest entries (dict insertion
+# order) make room for each line's new words, so the hot vocabulary stays
+# cached instead of being dropped all at once. Only rlis_titlecase passes
+# it (the memo key does not encode callback/rx, which are fixed on that
+# path).
 _WORD_MEMO: dict = {}
-_WORD_MEMO_CAP = 1 << 20
+_WORD_MEMO_CAP = 1 << 16
 
 
 def titlecase(text: str, callback=None, small_first_last: bool = True,
@@ -133,8 +137,10 @@ def titlecase(text: str, callback=None, small_first_last: bool = True,
             # store BEFORE the small_first/last fixes below — those rewrite
             # tc_line[0]/[-1] per line position, which the key does not
             # (and must not) encode
-            if len(_memo) > _WORD_MEMO_CAP:
-                _memo.clear()
+            _over = len(_memo) + len(_pending) - _WORD_MEMO_CAP
+            if _over > 0:
+                for _k in list(islice(_memo, _over)):
+                    del _memo[_k]
             for _k, _i in _pending:
                 _memo[_k] = tc_line[_i]
 

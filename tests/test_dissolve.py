@@ -17,12 +17,13 @@ from rlis2osm_spark.schemas import COMBINED_FIELDS
 
 
 def _combined_df(spark, rows):
-    """rows: (fid, highway, name, wkb)"""
+    """rows: (fid, highway, name, wkb) or (fid, highway, name, wkb, layer)"""
     recs = []
-    for fid, hw, name, geom in rows:
+    for fid, hw, name, geom, *layer in rows:
         rec = {c: None for c in COMBINED_FIELDS}
         rec.update({"src_table": "streets", "fid": fid, "part_idx": 0,
-                    "highway": hw, "name": name, "geometry": geom})
+                    "highway": hw, "name": name, "geometry": geom,
+                    "layer": layer[0] if layer else None})
         recs.append(rec)
     pdf = pd.DataFrame(recs)
     pdf["layer"] = pdf["layer"].astype("object")
@@ -151,8 +152,9 @@ def test_dissolve_synth_end_to_end(spark, synth_dir):
 
 
 def test_dissolve_iterative_matches_unionfind(spark, synth_dir):
-    """Scale-path CC (large-star/small-star) produces the same dissolve
-    groups as the per-group union-find."""
+    """Scale-path CC (large-star/small-star; max_group_rows=0 routes every
+    tag-group there) produces the same dissolve groups as the per-group
+    union-find."""
     from rlis2osm_spark.operators.combine import combine
 
     streets = spark.read.parquet(f"{synth_dir}/streets.parquet")
@@ -160,7 +162,7 @@ def test_dissolve_iterative_matches_unionfind(spark, synth_dir):
     bikes = spark.read.parquet(f"{synth_dir}/bike_routes.parquet")
     combined = combine(streets, trails, bikes)
     a = dissolve_ways(combined).select("component_id", "n_members")
-    b = dissolve_ways(combined, algorithm="iterative").select(
+    b = dissolve_ways(combined, max_group_rows=0).select(
         "component_id", "n_members")
     ra = sorted((r.component_id, r.n_members) for r in a.collect())
     rb = sorted((r.component_id, r.n_members) for r in b.collect())
@@ -182,33 +184,53 @@ def test_dissolve_null_geometry_raises(spark):
 
 def test_dissolve_auto_routes_degenerate_group(spark):
     """VERDICT r1 #3: a tag-group larger than max_group_rows auto-routes to
-    the iterative CC and produces identical output to pure union-find."""
+    the iterative CC, whose labels feed the same merge pass as the fused
+    union-find: every output row (component_id, tags, n_members, geometry
+    bytes) is identical to an all-fused run."""
+    import re
+
     rows = []
-    # one degenerate group: a 60-segment chain + a disjoint 10-segment chain,
-    # all identically tagged (the 'unnamed service road' skew shape)
+    # one degenerate group: a 60-segment chain + a disjoint 10-segment chain
+    # + 8 isolated segments, all identically tagged (the 'unnamed service
+    # road' skew shape); the integer layer tag makes routed rows take the
+    # nullable-int (float64 in pandas) -> int round trip of the merge
     for i in range(60):
-        rows.append((i, "service", None, _seg(i, 0, i + 1, 0)))
+        rows.append((i, "service", None, _seg(i, 0, i + 1, 0), -1))
     for i in range(10):
-        rows.append((100 + i, "service", None, _seg(i, 50, i + 1, 50)))
+        rows.append((100 + i, "service", None, _seg(i, 50, i + 1, 50), -1))
+    for i in range(8):
+        rows.append((120 + i, "service", None, _seg(i, 70, i, 71), -1))
+    # a second degenerate group with a null layer, so routed partitions
+    # hold null and non-null ints together
+    for i in range(25):
+        rows.append((300 + i, "service", None, _seg(i, 90, i, 91)))
     # plus small healthy groups
-    rows.append((200, "residential", "Oak", _seg(0, 9, 1, 9)))
-    rows.append((201, "residential", "Oak", _seg(1, 9, 2, 9)))
+    rows.append((200, "residential", "Oak", _seg(0, 9, 1, 9), 1))
+    rows.append((201, "residential", "Oak", _seg(1, 9, 2, 9), 1))
     rows.append((202, "tertiary", "Elm", _seg(5, 5, 6, 6)))
     df = _combined_df(spark, rows)
 
-    def canon(res):
+    def full_rows(res):
         return sorted(
-            (r.highway, r.name, r.n_members,
-             tuple(sorted(map(tuple, map(lambda p: (tuple(p[0]), tuple(p[-1])),
-                                          decode_lines(bytes(r.geometry)))))))
-            for r in res.collect())
+            (tuple(bytes(v) if isinstance(v, (bytes, bytearray)) else v
+                   for v in r) for r in res.collect()),
+            key=lambda t: t[0])  # component_id is unique per row
+
+    def shuffle_keys(res):
+        plan = res._jdf.queryExecution().executedPlan().toString()
+        return re.findall(r"Exchange hashpartitioning\(([^,#]*)", plan)
 
     auto = dissolve_ways(df, algorithm="auto", max_group_rows=20)
-    uf = dissolve_ways(df, algorithm="unionfind")
-    assert canon(auto) == canon(uf)
-    # the degenerate group really did split into its two chains
-    svc = [r for r in auto.collect() if r.highway == "service"]
-    assert sorted(r.n_members for r in svc) == [10, 60]
+    fused = dissolve_ways(df, approx_rows=len(rows))
+    assert any("component_id" in k for k in shuffle_keys(auto))
+    assert not any("component_id" in k for k in shuffle_keys(fused))
+    routed_rows = full_rows(auto)
+    assert routed_rows == full_rows(fused)
+    # the degenerate group really did split into its chains and isolates
+    svc = [r for r in auto.collect()
+           if r.highway == "service" and r.layer == -1]
+    assert sorted(r.n_members for r in svc) == [1] * 8 + [10, 60]
+    assert {r.layer for r in auto.collect()} == {-1, 1, None}
     # ordered=True on the HYBRID path (fused small side + iterative big
     # side unioned) is still a deterministic total order (r5)
     o1 = dissolve_ways(df, algorithm="auto", max_group_rows=20,
@@ -218,8 +240,17 @@ def test_dissolve_auto_routes_degenerate_group(spark):
     assert [r.component_id for r in o1] == [r.component_id for r in o2]
     assert [r.component_id for r in o1] == sorted(
         r.component_id for r in o1)
-    assert canon(dissolve_ways(df, algorithm="auto", max_group_rows=20,
-                               ordered=True)) == canon(uf)
+    assert full_rows(dissolve_ways(df, algorithm="auto", max_group_rows=20,
+                                   ordered=True)) == routed_rows
+
+
+@pytest.mark.parametrize("algorithm", ["unionfind", "iterative"])
+def test_dissolve_unknown_algorithm_raises(spark, algorithm):
+    """``algorithm`` accepts only "auto" and "greedy"; routes are forced
+    with max_group_rows (all iterative) or approx_rows (all fused)."""
+    df = _combined_df(spark, [(0, "residential", "Oak", _seg(0, 0, 1, 0))])
+    with pytest.raises(ValueError, match="unknown algorithm"):
+        dissolve_ways(df, algorithm=algorithm)
 
 
 def test_dissolve_same_tag_fork_divergence_pin(spark):

@@ -32,3 +32,34 @@ from rlis2osm_spark.functions.titlecase_port import rlis_titlecase
 def test_rlis_titlecase(raw, expected):
     # pipeline always lowercases before titlecase (main.py:90)
     assert rlis_titlecase(raw) == expected
+
+
+def test_word_memo_evicts_oldest_words(monkeypatch):
+    """A full word memo evicts its oldest entries (insertion order) to make
+    room for a line's new words, never the whole memo at once; the words
+    cached most recently survive, and evicted words recompute to the same
+    titlecase."""
+    from rlis2osm_spark.functions import titlecase_port as tp
+
+    monkeypatch.setattr(tp, "_WORD_MEMO", {})
+    monkeypatch.setattr(tp, "_WORD_MEMO_CAP", 4)
+    memo = tp._WORD_MEMO
+
+    def cached():
+        return [k[0] for k in memo]
+
+    assert rlis_titlecase("NORTHWEST EVERETT STREET") == \
+        "Northwest Everett Street"
+    assert rlis_titlecase("45TH AVENUE") == "45th Avenue"
+    assert cached() == ["everett", "street", "45th", "avenue"]
+    # 'avenue' is a hit; only 'oak' is new, so only the oldest entry goes
+    assert rlis_titlecase("OAK AVENUE") == "Oak Avenue"
+    assert cached() == ["street", "45th", "avenue", "oak"]
+    assert memo[("avenue", False, True)] == "Avenue"
+    assert memo[("oak", False, True)] == "Oak"
+    # evicted words recompute correctly and re-enter as the newest
+    assert rlis_titlecase("NORTHWEST EVERETT STREET") == \
+        "Northwest Everett Street"
+    assert cached() == ["avenue", "oak", "northwest", "everett"]
+    assert rlis_titlecase("OAK AVENUE") == "Oak Avenue"
+    assert cached() == ["avenue", "oak", "northwest", "everett"]
